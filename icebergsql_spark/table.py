@@ -2589,11 +2589,15 @@ class ManagedTable:
             )
             df = df.join(dv_df, ["__fp", "__pos"], "left_anti")
         if eqs:
-            df = self._apply_eq_deletes(df, files, eqs)
+            df = self._apply_eq_deletes(df, files, eqs, snapshot.schema_id)
         return df.drop("__fp", "__pos")  # drop ignores an absent __pos
 
     def _apply_eq_deletes(
-        self, df: DataFrame, files: list["DataFile"], eqs: list
+        self,
+        df: DataFrame,
+        files: list["DataFile"],
+        eqs: list,
+        schema_id: int | None,
     ) -> DataFrame:
         """Mask rows whose key appears in an equality-delete rowset with a
         HIGHER sequence number than the row's data file. Per key-column
@@ -2601,7 +2605,12 @@ class ManagedTable:
         max seq per key (one row per deleted key — the build side is
         delete churn, broadcastable), left-join on the keys and filter
         ``max_eq_seq <= file_seq`` survivors. SQL equality: NULL keys
-        never match (CDC keys are non-null by construction)."""
+        never match (CDC keys are non-null by construction).
+
+        Entries key on the column names of the snapshot's schema era
+        (``schema_id``); a key renamed since — legal once conversion
+        cleared the entry from the current snapshot — resolves to its
+        current name through the field ids."""
         spark = self.spark
         # VALUES LocalRelation (see convert_equality_deletes note): this
         # runs on EVERY masked read with eq entries — a Python-RDD local
@@ -2615,25 +2624,40 @@ class ManagedTable:
         for e in eqs:
             by_keycols.setdefault(tuple(e.key_cols), []).append(e)
         cur_schema = self.schema
+        cur_names = set(cur_schema.names)
+        rmap = self.rename_map_for(schema_id) if schema_id is not None else None
         for key_cols, entries in sorted(by_keycols.items()):
+            names = [c if rmap is None else rmap.get(c) for c in key_cols]
+            gone = [c for c, n in zip(key_cols, names) if n not in cur_names]
+            if gone:
+                raise TableValidationError(
+                    f"equality delete keys {gone} of this snapshot no longer "
+                    "exist in the table schema; its masked rows cannot be "
+                    "resolved"
+                )
             # pinned read schema — see convert_equality_deletes; this path
             # runs on EVERY masked read with eq entries, so the inference
             # job it skips repeated per entry per action
-            eq_schema = T.StructType([cur_schema[c] for c in key_cols])
+            eq_schema = T.StructType(
+                [
+                    T.StructField(c, cur_schema[n].dataType)
+                    for c, n in zip(key_cols, names)
+                ]
+            )
             parts = [
                 spark.read.schema(eq_schema)
                 .parquet(e.eq_path)
-                .select(*key_cols)
+                .select(*[F.col(c).alias(n) for c, n in zip(key_cols, names)])
                 .withColumn("__eqseq", F.lit(e.seq).cast("long"))
                 for e in entries
             ]
             eq_df = parts[0]
             for p in parts[1:]:
                 eq_df = eq_df.unionByName(p)
-            eq_df = eq_df.groupBy(*key_cols).agg(
+            eq_df = eq_df.groupBy(*names).agg(
                 F.max("__eqseq").alias("__eqseq")
             )
-            df = df.join(eq_df, list(key_cols), "left").filter(
+            df = df.join(eq_df, names, "left").filter(
                 F.col("__eqseq").isNull()
                 | (F.col("__eqseq") <= F.col("__fseq"))
             ).drop("__eqseq")
@@ -3020,6 +3044,12 @@ class ManagedTable:
                     f"zorder_by column {c!r} must be numeric "
                     f"(got {schema[c].dataType.simpleString()})"
                 )
+        if zorder_by and "__zsort" in cols:
+            # the rewrite projects its Morton key under this name
+            raise TableValidationError(
+                "zorder_by needs the column name '__zsort', which this "
+                "table already uses"
+            )
         cluster = sort_by or zorder_by
         # ``where`` scopes the rewrite (Iceberg rewrite_data_files' filter):
         # only files whose partition/footer stats ADMIT the predicate are

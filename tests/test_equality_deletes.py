@@ -157,6 +157,23 @@ def test_schema_evolution_blocked_on_live_eq_keys(spark, tbl):
     assert tbl.to_df().count() == 499
 
 
+def test_time_travel_masks_after_key_rename(spark, tbl):
+    """A snapshot read from before a key column was renamed still applies
+    its equality deletes: the entry's historical key names resolve to the
+    current ones through the field ids. A dropped key fails clearly."""
+    tbl.upsert_by_keys(spark.createDataFrame([(7, -1, 3)], DDL), ["k"])
+    pre = tbl.meta.current_snapshot()
+    expect = rows(tbl.to_df())
+    tbl.convert_equality_deletes()
+    tbl.rename_column("k", "kk")
+    assert rows(tbl.to_df(snapshot_id=pre.snapshot_id)) == expect
+    assert tbl.to_df(snapshot_id=pre.snapshot_id).filter("kk = 7").count() == 1
+    # a dropped key cannot be resolved: a targeted error, not a KeyError
+    tbl.drop_column("kk")
+    with pytest.raises(TableValidationError, match="no longer exist"):
+        tbl.to_df(snapshot_id=pre.snapshot_id).count()
+
+
 def test_upsert_duplicate_source_keys_rejected(spark, tbl):
     """Two images of one key at the same seq would both survive — the
     batch must be pre-reduced (same cardinality contract as MERGE)."""

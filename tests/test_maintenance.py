@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from icebergsql_spark.table import Catalog
+from icebergsql_spark.table import Catalog, TableValidationError
 
 DDL = "k bigint, v double, part int"
 
@@ -248,6 +248,23 @@ def test_zorder_compact_prunes_on_both_columns(spark, tmp_path):
         assert scan.dataframe().count() == src.filter(f"{col} < 128").count()
     with pytest.raises(Exception):
         tbl.compact(sort_by=["x"], zorder_by=["y"])
+
+
+def test_zorder_refuses_user_column_named_zsort(spark, tmp_path):
+    """The z-order rewrite projects its sort key as ``__zsort``; a table
+    column of that name must stop the rewrite, not be overwritten."""
+    cat = Catalog(spark, str(tmp_path / "whzs"))
+    tbl = cat.create_table("tzs", "x bigint, y bigint, __zsort bigint, part int", ["part"])
+    tbl.insert(
+        spark.range(50).select(
+            F.col("id").alias("x"), (F.col("id") % 7).alias("y"),
+            (F.col("id") * 10).alias("__zsort"), F.lit(0).cast("int").alias("part"),
+        )
+    )
+    before = tbl.meta.current_snapshot().snapshot_id
+    with pytest.raises(TableValidationError, match="__zsort"):
+        tbl.compact(zorder_by=["x", "y"])
+    assert tbl.meta.current_snapshot().snapshot_id == before
 
 
 def test_optimize_and_vacuum_sql_verbs(spark, tmp_path):
