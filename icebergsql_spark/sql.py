@@ -748,9 +748,7 @@ class Engine:
                 if snap is not None
                 else 0
             )
-            return self.spark.sql(
-                f"SELECT CAST({added} AS INT) AS added_files_count"
-            )
+            return self._status_df([(added,)], "added_files_count int")
 
         sp = re.match(
             r"^\s*show\s+partitions\s+`?(?P<name>\w+)`?\s*$",
@@ -805,13 +803,11 @@ class Engine:
             # MoR-aware: subtract DV counts / fall back to a masked count
             # so deleted_rows never overstates on a table with deletes
             before = tbl.live_row_count()
-            # empty JVM relation + OneRowRelation result: the Python-RDD
-            # empty frame scheduled a defaultParallelism-task no-op write
-            # and the result frame a Python-runner scan (r10 lesson)
+            # empty JVM relation + VALUES result: the Python-RDD empty
+            # frame scheduled a defaultParallelism-task no-op write, and a
+            # result frame over a OneRowRelation runs a job to collect
             tbl.insert(_empty_typed_df(self.spark, tbl.schema), overwrite=True)
-            return self.spark.sql(
-                f"SELECT CAST({int(before)} AS BIGINT) AS deleted_rows"
-            )
+            return self._status_df([(int(before),)], "deleted_rows bigint")
 
         dl = _DELETE_RE.match(text)
         if dl and self.catalog.table_exists(dl.group("name").strip("`")):
@@ -826,8 +822,8 @@ class Engine:
                 )
             )
             after = tbl.live_row_count(snap)
-            return self.spark.sql(
-                f"SELECT CAST({int(before - after)} AS BIGINT) AS deleted_rows"
+            return self._status_df(
+                [(int(before - after),)], "deleted_rows bigint"
             )
 
         up = _UPDATE_RE.match(text)
@@ -837,10 +833,9 @@ class Engine:
                 _parse_assignments(up.group("sets")),
                 (up.group("pred") or "").strip() or None,
             )
-            return self.spark.sql(
-                f"SELECT CAST({int(snap.num_added_files)} AS INT) AS "
-                "files_rewritten, "
-                f"CAST({int(snap.num_deleted_files)} AS INT) AS files_replaced"
+            return self._status_df(
+                [(int(snap.num_added_files), int(snap.num_deleted_files))],
+                "files_rewritten int, files_replaced int",
             )
 
         mg = _MERGE_RE.match(text)
@@ -1235,16 +1230,16 @@ class Engine:
             n = scan.count_from_stats()
             if n is not None:
                 alias = cs.group("alias") or "count(1)"
-                # JVM-side OneRowRelation, NOT createDataFrame: a Python
-                # local frame is an RDD-backed scan with defaultParallelism
+                # JVM-side VALUES, NOT createDataFrame: a Python local
+                # frame is an RDD-backed scan with defaultParallelism
                 # partitions, so composing two (e.g. crossJoin of two
                 # metadata counts) plans a 32×32-task CartesianProduct of
                 # Python runners — ~16s of overhead for two driver-known
-                # numbers. SELECT <literal> folds to a single-partition
-                # LocalTableScan.
-                return self.spark.sql(
-                    f"SELECT CAST({int(n)} AS BIGINT) AS `{alias}`"
-                )
+                # numbers. Nor SELECT <literal>: Spark plans a
+                # OneRowRelation as a one-partition RDD scan, so collecting
+                # it runs a job. VALUES folds to a LocalTableScan, which
+                # collects on the driver with zero jobs.
+                return self._status_df([(int(n),)], f"{alias} bigint")
 
         text = self._register_views(text, as_of_millis, as_of_ref)
         return self.spark.sql(text)
@@ -1424,9 +1419,7 @@ class Engine:
             # manifests already hold
             tbl.register_data_files(live)
             added = len(live)
-        return self.spark.sql(
-            f"SELECT CAST({added} AS INT) AS added_files_count"
-        )
+        return self._status_df([(added,)], "added_files_count int")
 
     def _merge_managed(self, mg: re.Match) -> DataFrame:
         """MERGE [WITH SCHEMA EVOLUTION] INTO t [AS a] USING src [AS b]
@@ -1801,7 +1794,7 @@ class Engine:
             t.diff(
                 int(args["from_snapshot_id"]), to, key_cols=keys
             ).createOrReplaceTempView(view)
-            return spark.sql(f"SELECT '{view}' AS changelog_view")
+            return self._status_df([(view,)], "changelog_view string")
         if proc == "publish_changes":
             # CALL [system.]publish_changes(table, wap_id) — Iceberg's
             # write-audit-publish publish step: locate the STAGED snapshot

@@ -1080,6 +1080,15 @@ class ManagedTable:
         bad = sorted(set(key_cols) - schema_cols)
         if bad:
             raise TableValidationError(f"equality-delete key(s) {bad} not in schema")
+        # the payload CASTs keys down to the table types (below); without
+        # ANSI an out-of-range key would silently wrap into a real key and
+        # mask a row nobody deleted, so refuse instead of writing it
+        if self.spark.conf.get("spark.sql.ansi.enabled", "true").lower() != "true":
+            raise TableValidationError(
+                "equality deletes need spark.sql.ansi.enabled=true: a "
+                "non-ANSI cast would wrap an out-of-range key into a "
+                "false match"
+            )
         eq_dir = os.path.join(
             self.meta.metadata_dir, f"eq-data-{uuid.uuid4().hex[:12]}"
         )
@@ -1625,8 +1634,8 @@ class ManagedTable:
             all_keys = (
                 self.read_files_live(parent_files, parent).select(*keys)
                 if parent_files
-                else self.spark.createDataFrame(
-                    [], T.StructType([schema[k] for k in keys])
+                else _empty_typed_df(
+                    self.spark, T.StructType([schema[k] for k in keys])
                 )
             )
             inserts = self._merge_insert_df(
@@ -2460,14 +2469,15 @@ class ManagedTable:
                 "row positions need parquet (_metadata.row_index); "
                 f"table format is {self.file_format}"
             )
+        want_meta = with_pos or with_fp
         if not files:
             out_schema = schema
-            if with_pos or with_fp:
+            if want_meta:
                 extra = [T.StructField("__fp", T.StringType())]
                 if with_pos:
                     extra.append(T.StructField("__pos", T.LongType()))
                 out_schema = T.StructType(list(schema.fields) + extra)
-            return spark.createDataFrame([], out_schema)
+            return _empty_typed_df(spark, out_schema)
         # Group by (schema era, path-partition constants): Hive-layout
         # imports (DataFile.path_partition) physically lack the partition
         # columns, so each distinct partition tuple becomes its own read
@@ -2482,12 +2492,13 @@ class ManagedTable:
             )
             by_grp.setdefault((f.schema_id, pkey), []).append(f.path)
         fmt = self.file_format
-        pos_cols = [
-            _norm_file_path(F.col("_metadata.file_path")).alias("__fp"),
-        ]
+        pos_cols = []
+        if want_meta:
+            pos_cols.append(
+                _norm_file_path(F.col("_metadata.file_path")).alias("__fp")
+            )
         if with_pos:
             pos_cols.append(F.col("_metadata.row_index").alias("__pos"))
-        want_meta = with_pos or with_fp
         parts: list[DataFrame] = []
         # repr-sort pkey: partition values may be None (Hive default
         # partition), which tuples can't order against strings
@@ -4283,6 +4294,11 @@ class ManagedScan:
         self.augmented: Pred = augment_predicate(
             self.predicate, table.column_dependencies
         )
+        # per-scan memo of values every file's pruning stats need: the
+        # table schema (a JSON parse per access) and the rename map per
+        # schema era (a walk of two field-id maps per call)
+        self._schema = table.schema
+        self._rmaps: dict[int, dict[str, str] | None] = {}
         self.planned_files: list[DataFile] = self._plan()
 
     def _pruning_stats(self, f: DataFile) -> dict[str, ColStats]:
@@ -4290,8 +4306,10 @@ class ManagedScan:
         an old-era file's stat keys are translated via the field-id rename
         map; stats of dropped columns (dead ids) are discarded, so a
         re-added name can never be mis-pruned by a dead column's bounds."""
-        schema = self.table.schema
-        rmap = self.table.rename_map_for(f.schema_id)
+        schema = self._schema
+        if f.schema_id not in self._rmaps:
+            self._rmaps[f.schema_id] = self.table.rename_map_for(f.schema_id)
+        rmap = self._rmaps[f.schema_id]
         if rmap is None:
             stats = dict(f.stats)
         else:
@@ -4366,10 +4384,30 @@ class ManagedScan:
         the filter — used by the SQL front door, where the statement's own
         WHERE executes in Spark SQL and the scan's predicate served only for
         manifest pruning (it may contain alias-qualified names that don't
-        resolve against the bare table)."""
+        resolve against the bare table).
+
+        A scan whose planned files together hold at most
+        ``spark.sql.files.openCostInBytes`` (Spark's own cost of opening
+        one file, 4 MB by default) comes back as ONE partition. Spark
+        would otherwise split those few bytes into a task per file, and
+        plan a hash Exchange above every aggregate, sort or window: two
+        jobs (shuffle map, then result) for a pruned GROUP BY. A
+        single-partition child already meets every required
+        distribution, so the query runs as one job with one task.
+        Merge-on-read masks keep working: their build sides are
+        broadcast, and a broadcast join keeps its stream side's
+        partitioning. Larger scans keep Spark's split."""
         df = self.table.read_files_live(self.planned_files, self.snapshot)
         if self.where and apply_where:
             df = df.filter(self.where)
+        planned_bytes = sum(f.file_size for f in self.planned_files)
+        open_cost = (
+            self.table.spark._jsparkSession.sessionState()
+            .conf()
+            .filesOpenCostInBytes()
+        )
+        if planned_bytes <= open_cost:
+            df = df.coalesce(1)
         return df
 
 
