@@ -376,6 +376,14 @@ def _le(a, b):
     return a <= b
 
 
+def _has_nan(*values) -> bool:
+    """Spark orders NaN above every other value and has NaN = NaN, where
+    Python's comparisons are all False. A NaN bound (parquet-mr writes
+    max = NaN for a column that holds one) or literal therefore orders
+    nothing here, and the file cannot be pruned or proven."""
+    return any(isinstance(v, float) and v != v for v in values)
+
+
 def _bloom_admits(st, v) -> bool:
     """Per-file Bloom probe for equality literals (catalog/stats.py
     layout). Sound: only int/str literals probe (their Python str() equals
@@ -426,6 +434,9 @@ def may_match(pred: Pred, stats: dict[str, "ColStats"]) -> bool:  # noqa: F821
         if all_null:
             return False  # comparisons/IN never match nulls
         if st.min is None or st.max is None:
+            return True
+        values = pred.values if isinstance(pred, In) else (pred.value,)
+        if _has_nan(st.min, st.max, *values):
             return True
         try:
             if isinstance(pred, In):
@@ -481,6 +492,8 @@ def must_match_all(pred: Pred, stats: dict[str, "ColStats"]) -> bool:  # noqa: F
             return False
         if st.null_count is None or st.null_count > 0:
             return False
+        if _has_nan(st.min, st.max, *pred.values):
+            return False
         # every row provably IN the set only when the file is single-valued
         # (the partition point-range encoding) and that value is listed
         try:
@@ -494,6 +507,8 @@ def must_match_all(pred: Pred, stats: dict[str, "ColStats"]) -> bool:  # noqa: F
         if st.null_count is None or st.null_count > 0:
             return False  # null rows never satisfy a comparison; None=unknown
         v = pred.value
+        if _has_nan(st.min, st.max, v):
+            return False
         try:
             if pred.op == "=":
                 return st.min == st.max == v

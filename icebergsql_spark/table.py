@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from icebergsql_spark.catalog.driver_write import driver_write
 from icebergsql_spark.catalog.metadata import (
     ColStats,
     CommitConflict,
@@ -650,18 +651,27 @@ class ManagedTable:
             for c in order.split(",")
             if c.strip() and "(" not in order
         ]
-        present = {f.name for f in self.schema.fields}
-        if sort_cols and all(c in present for c in sort_cols):
+        declared = {f.name: f.dataType for f in self.schema.fields}
+        if sort_cols and all(c in declared for c in sort_cols):
             write_df = write_df.sortWithinPartitions(
                 *[F.col(PART_PREFIX + pc) for pc in part_cols],
                 *[F.col(c) for c in sort_cols],
             )
-        (
-            write_df.write.mode("errorifexists")
-            .partitionBy(*[PART_PREFIX + pc for pc in part_cols])
-            .format(self.file_format)
-            .save(out_dir)
-        )
+        partition_by = [PART_PREFIX + pc for pc in part_cols]
+        # a small bounded source is collected once and written by pyarrow
+        # on the driver, in the same layout (catalog/driver_write.py)
+        if not (
+            self.file_format == "parquet"
+            and not distribute_by
+            and not order
+            and driver_write(write_df, out_dir, partition_by, declared)
+        ):
+            (
+                write_df.write.mode("errorifexists")
+                .partitionBy(*partition_by)
+                .format(self.file_format)
+                .save(out_dir)
+            )
         return self._build_data_files(out_dir)
 
     def add_files(
@@ -1100,17 +1110,12 @@ class ManagedTable:
         # parquet reader promotes int32→long / float→double under an
         # explicit schema.
         tschema = self.schema
-        (
-            keys_df.select(
-                *[
-                    F.col(c).cast(tschema[c].dataType).alias(c)
-                    for c in key_cols
-                ]
-            )
-            .distinct()
-            .write.mode("errorifexists")
-            .parquet(eq_dir)
-        )
+        payload = keys_df.select(
+            *[F.col(c).cast(tschema[c].dataType).alias(c) for c in key_cols]
+        ).distinct()
+        declared = {c: tschema[c].dataType for c in key_cols}
+        if not driver_write(payload, eq_dir, [], declared):
+            payload.write.mode("errorifexists").parquet(eq_dir)
         # exact row count from the just-written parquet FOOTERS (driver-side
         # thread pool, same collector as data-file stats) — replaces a full
         # Spark read+count job per equality-delete commit; at CDC commit
