@@ -629,9 +629,6 @@ class TableMetadata:
             return cls.from_json(json.load(f))
 
 
-def ref_snapshot_id(ref: dict) -> int:
-    return int(ref["snapshot_id"])
-
 def added_files_between(
     meta: TableMetadata,
     from_snapshot_id: int,

@@ -37,6 +37,7 @@ so the two cross near 50k values. 32,768 stays below the crossover.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 from concurrent.futures import ThreadPoolExecutor
 
 from icebergsql_spark.catalog.metadata import ColStats
@@ -101,8 +102,16 @@ def _truncate_max(v, limit: int = STAT_TRUNCATE_LEN):
     return v
 
 
-def file_stats(path: str) -> tuple[int, int, dict[str, ColStats]]:
-    """(record_count, byte_size, {column: ColStats}) for one parquet file."""
+def file_stats(
+    path: str, imported: bool = False
+) -> tuple[int, int, dict[str, ColStats]]:
+    """(record_count, byte_size, {column: ColStats}) for one parquet file.
+
+    ``imported`` marks a file from an outside writer. Its float/double
+    bounds are kept only when parquet-mr wrote it: Arrow C++ (pyarrow)
+    leaves NaN out of min/max, so a `d > 5` pruned on such a bound would
+    drop a NaN row that Spark returns. The driver writer's pyarrow files
+    are not imported: it writes no statistics for a column holding NaN."""
     import os
 
     import pyarrow.parquet as pq
@@ -110,6 +119,11 @@ def file_stats(path: str) -> tuple[int, int, dict[str, ColStats]]:
     pf = pq.ParquetFile(path)
     meta = pf.metadata
     n_rows = meta.num_rows
+    unbounded: set[str] = set()
+    if imported and not (meta.created_by or "").startswith("parquet-mr"):
+        unbounded = {
+            c.path for c in pf.schema if c.physical_type in ("FLOAT", "DOUBLE")
+        }
     agg: dict[str, ColStats] = {}
     complete: dict[str, bool] = {}
     for rg in range(meta.num_row_groups):
@@ -145,8 +159,11 @@ def file_stats(path: str) -> tuple[int, int, dict[str, ColStats]]:
     out = {}
     for name, st in agg.items():
         if complete.get(name):
-            st.min = _truncate_min(st.min)
-            st.max = _truncate_max(st.max)
+            if name in unbounded:
+                st.min = st.max = None
+            else:
+                st.min = _truncate_min(st.min)
+                st.max = _truncate_max(st.max)
             out[name] = st
         # else: drop bounds entirely (reference behavior for partial stats)
     return n_rows, os.path.getsize(path), out
@@ -223,10 +240,13 @@ _FALLBACK_READERS = {"orc": orc_file_stats, "avro": avro_file_stats}
 
 
 def collect_stats(
-    paths: list[str], spark=None, file_format: str = "parquet"
+    paths: list[str], spark=None, file_format: str = "parquet", imported: bool = False
 ) -> dict[str, tuple[int, int, dict[str, ColStats]]]:
-    """Stats for many files; distributed via Spark when the list is large."""
-    reader = _FALLBACK_READERS.get(file_format, file_stats)
+    """Stats for many files; distributed via Spark when the list is large.
+    ``imported`` is passed on to ``file_stats``."""
+    reader = _FALLBACK_READERS.get(file_format) or functools.partial(
+        file_stats, imported=imported
+    )
     if spark is not None and len(paths) > DISTRIBUTE_THRESHOLD:
         sc = spark.sparkContext
         n_parts = min(len(paths), 64)

@@ -481,9 +481,9 @@ def _part_str(v) -> str | None:
 
 def _detached_table(location: str):
     """A ManagedTable bound to metadata only — no Catalog/SparkSession.
-    The snapshot-commit path (_commit_snapshot/_commit_with_retry/refresh)
-    is pure metadata code, so the datasource writer reuses it verbatim
-    instead of duplicating manifest/retry/cleanup logic."""
+    The snapshot-commit path (_commit_snapshot/refresh) is pure metadata
+    code, so the datasource writer reuses it verbatim instead of
+    duplicating manifest/retry/cleanup logic."""
     from icebergsql_spark.table import ManagedTable
 
     t = ManagedTable.__new__(ManagedTable)

@@ -47,17 +47,11 @@ from icebergsql_spark.table import (
 )
 
 _AS_OF_RE = re.compile(r"^\s*as\s+of\s+'([^']+)'\s*(.*)$", re.IGNORECASE | re.DOTALL)
-_SNAPSHOTS_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$snapshots`")
-_REFS_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$refs`")
-_FILES_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$files`")
-_PARTITIONS_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$partitions`")
-_HISTORY_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$history`")
-_MANIFESTS_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$manifests`")
-_DELETE_FILES_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$delete_files`")
-_ENTRIES_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$entries`")
-_ALL_FILES_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$all_files`")
-_METADATA_LOG_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$metadata_log`")
-_LINEAGE_RE = re.compile(r"`([A-Za-z_][A-Za-z0-9_]*)\$lineage`")
+# `t$<kind>` metadata tables, rewritten to temp views named t__<kind>
+_METADATA_VIEW_RE = re.compile(
+    r"`([A-Za-z_][A-Za-z0-9_]*)\$(snapshots|refs|files|partitions|history|"
+    r"manifests|delete_files|entries|all_files|metadata_log|lineage)`"
+)
 _CREATE_RE = re.compile(
     r"^\s*create\s+table\s+(?:if\s+not\s+exists\s+)?(?P<name>[`\w.]+)\s*"
     r"(?:\((?P<cols>.*?)\))?\s*using\s+(?P<fmt>\w+)\s*"
@@ -485,55 +479,13 @@ class Engine:
     ) -> str:
         """Register every referenced managed table as a temp view (time-
         traveled when as_of is set, manifest-pruned when a WHERE clause is
-        extractable) and rewrite `$snapshots` / `$refs` references."""
-        for m in set(_SNAPSHOTS_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.snapshots_df().createOrReplaceTempView(f"{m}__snapshots")
-        text = _SNAPSHOTS_RE.sub(lambda mo: f"{mo.group(1)}__snapshots", text)
-        for m in set(_REFS_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.refs_df().createOrReplaceTempView(f"{m}__refs")
-        text = _REFS_RE.sub(lambda mo: f"{mo.group(1)}__refs", text)
-        for m in set(_FILES_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.files_df().createOrReplaceTempView(f"{m}__files")
-        text = _FILES_RE.sub(lambda mo: f"{mo.group(1)}__files", text)
-        for m in set(_PARTITIONS_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.partitions_df().createOrReplaceTempView(f"{m}__partitions")
-        text = _PARTITIONS_RE.sub(lambda mo: f"{mo.group(1)}__partitions", text)
-        for m in set(_HISTORY_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.history_df().createOrReplaceTempView(f"{m}__history")
-        text = _HISTORY_RE.sub(lambda mo: f"{mo.group(1)}__history", text)
-        for m in set(_MANIFESTS_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.manifests_df().createOrReplaceTempView(f"{m}__manifests")
-        text = _MANIFESTS_RE.sub(lambda mo: f"{mo.group(1)}__manifests", text)
-        for m in set(_DELETE_FILES_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.delete_files_df().createOrReplaceTempView(f"{m}__delete_files")
-        text = _DELETE_FILES_RE.sub(
-            lambda mo: f"{mo.group(1)}__delete_files", text
-        )
-        for m in set(_ENTRIES_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.entries_df().createOrReplaceTempView(f"{m}__entries")
-        text = _ENTRIES_RE.sub(lambda mo: f"{mo.group(1)}__entries", text)
-        for m in set(_ALL_FILES_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.all_files_df().createOrReplaceTempView(f"{m}__all_files")
-        text = _ALL_FILES_RE.sub(lambda mo: f"{mo.group(1)}__all_files", text)
-        for m in set(_METADATA_LOG_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.metadata_log_df().createOrReplaceTempView(f"{m}__metadata_log")
-        text = _METADATA_LOG_RE.sub(
-            lambda mo: f"{mo.group(1)}__metadata_log", text
-        )
-        for m in set(_LINEAGE_RE.findall(text)):
-            tbl = self.catalog.load_table(m)
-            tbl.lineage_df().createOrReplaceTempView(f"{m}__lineage")
-        text = _LINEAGE_RE.sub(lambda mo: f"{mo.group(1)}__lineage", text)
+        extractable) and rewrite `t$<kind>` metadata-table references."""
+        for name, kind in set(_METADATA_VIEW_RE.findall(text)):
+            tbl = self.catalog.load_table(name)
+            getattr(tbl, f"{kind}_df")().createOrReplaceTempView(
+                f"{name}__{kind}"
+            )
+        text = _METADATA_VIEW_RE.sub(r"\1__\2", text)
 
         referenced = self._referenced_managed(text)
         per_table: dict[str, str | None] = {}

@@ -555,10 +555,9 @@ class ManagedTable:
             parent = self.meta.snapshot_by_id(self.meta.refs[branch]["snapshot_id"])
         else:
             parent = self.meta.current_snapshot()
-        parent_files = parent.live_files() if parent else []
-
         # files an overwrite will delete, computed from the pre-insert
-        # snapshot (matchIceDataFiles semantics)
+        # snapshot (matchIceDataFiles semantics); an append opens no manifest
+        parent_files = parent.live_files() if overwrite and parent else []
         if overwrite and static_partition:
             deleted = [
                 f
@@ -805,7 +804,9 @@ class ManagedTable:
                     else ""
                 )
             )
-        stats_map = collect_stats(paths, spark=self.spark, file_format=fmt)
+        stats_map = collect_stats(
+            paths, spark=self.spark, file_format=fmt, imported=True
+        )
         if fmt == "parquet":
             # per-file footer guard: the directory-level (merged) schema
             # can hide one deviating file — its stats keys can't
@@ -1995,10 +1996,70 @@ class ManagedTable:
             op = "delete"
         else:
             op = "append"
+        try:
+            for rebases_left in range(5, -1, -1):
+                snap, written = self._derive_snapshot(
+                    parent, added, deleted, op, extra_summary,
+                    new_dv_entries, new_eq_entries, drop_eq,
+                )
+                try:
+                    self._publish(snap, branch)
+                    return snap
+                except CommitConflict:
+                    # Optimistic retry for APPENDS (the reference's commit
+                    # is retry-able the same way, SparkTableOperations.
+                    # scala:91-149): no metadata references this attempt's
+                    # manifests, so they go; the data files stay, and the
+                    # next attempt derives the whole snapshot again from
+                    # the refreshed head. Other operations computed their
+                    # delete set against a stale snapshot, so they surface
+                    # the conflict to the caller.
+                    for path in written:
+                        os.remove(path)
+                    if op != "append" or not rebases_left:
+                        raise
+                    self.refresh()
+                    if branch is None:
+                        parent = self.meta.current_snapshot()
+                    else:
+                        bref = self.meta.refs.get(branch)
+                        if bref is None or bref["type"] != "branch":
+                            raise  # branch dropped concurrently: surface it
+                        parent = self.meta.snapshot_by_id(bref["snapshot_id"])
+        except Exception:
+            # cleanup-on-failure: a commit that cannot land leaves no
+            # orphaned data files (mirrors the reference's cleanup,
+            # SparkTableOperations.scala:120-149). All of this insert's
+            # files live under one data/<commit-id>/ directory. Callers
+            # whose 'added' files are re-referenced from EXISTING snapshots
+            # (cherry-pick) pass cleanup_on_failure=False — those files
+            # must survive the failed commit.
+            if added and cleanup_on_failure:
+                import shutil
 
+                commit_dir = os.path.join(
+                    self.meta.data_dir,
+                    os.path.relpath(added[0].path, self.meta.data_dir).split(os.sep)[0],
+                )
+                shutil.rmtree(commit_dir, ignore_errors=True)
+            raise
+
+    def _derive_snapshot(
+        self,
+        parent: Snapshot | None,
+        added: list[DataFile],
+        deleted: list[DataFile],
+        op: str,
+        extra_summary: dict[str, str] | None,
+        new_dv_entries: list | None,
+        new_eq_entries: list | None,
+        drop_eq: bool,
+    ) -> tuple[Snapshot, list[str]]:
+        """The snapshot that applies (added, deleted, new DV/eq entries) on
+        top of ``parent``, and the manifest files written for it."""
         snapshot_id = int(time.time() * 1000) * 1000 + len(self.meta.snapshots)
         meta_dir = self.meta.metadata_dir
-        manifest_paths: list[str] = []
+        written: list[str] = []
         deleted_paths = {f.path for f in deleted}
         # monotone data sequence number (Iceberg's sequence-number
         # ordering): files added by this commit carry it; equality deletes
@@ -2009,7 +2070,12 @@ class ManagedTable:
         )
         for f in added:
             f.seq = seq
-        if parent is not None:
+        if parent is None or not deleted_paths:
+            # no data file died: reuse every parent manifest without
+            # opening one (the plain-append hot path)
+            manifest_paths = list(parent.manifest_paths) if parent else []
+        else:
+            manifest_paths = []
             for m in parent.manifests():
                 files = m.files()
                 survivors = [f for f in files if f.path not in deleted_paths]
@@ -2021,15 +2087,17 @@ class ManagedTable:
                     )
                     # write() may switch to parquet above the entry
                     # threshold — track the path it actually used
-                    manifest_paths.append(Manifest.write(rewritten, survivors).path)
+                    written.append(Manifest.write(rewritten, survivors).path)
+                    manifest_paths.append(written[-1])
                 # fully-deleted manifest: dropped
-        new_manifest: str | None = None
         if added:
-            new_manifest = Manifest.write(
-                os.path.join(meta_dir, f"manifest-{uuid.uuid4().hex[:12]}.json"),
-                added,
-            ).path
-            manifest_paths.append(new_manifest)
+            written.append(
+                Manifest.write(
+                    os.path.join(meta_dir, f"manifest-{uuid.uuid4().hex[:12]}.json"),
+                    added,
+                ).path
+            )
+            manifest_paths.append(written[-1])
 
         # -- merge-on-read delete vectors: inherit the parent's entries,
         # MINUS entries whose data file this commit removed/rewrote (a DV
@@ -2069,7 +2137,7 @@ class ManagedTable:
                 merged = survivors_dv + list(new_dv_entries or [])
                 tot_dv = sum(e.count for e in merged)
                 if merged:
-                    dv_manifest_paths.append(
+                    written.append(
                         DVManifest.write(
                             os.path.join(
                                 meta_dir,
@@ -2078,6 +2146,7 @@ class ManagedTable:
                             merged,
                         ).path
                     )
+                    dv_manifest_paths.append(written[-1])
 
         # -- equality deletes: inherited wholesale (they are seq-scoped,
         # not file-scoped — a rewrite's outputs carry a HIGHER seq, so old
@@ -2098,7 +2167,7 @@ class ManagedTable:
                     for e in EqManifest(p).entries()
                 ] + list(new_eq_entries)
                 tot_eq = sum(e.count for e in merged_eq)
-                eq_manifest_paths.append(
+                written.append(
                     EqManifest.write(
                         os.path.join(
                             meta_dir,
@@ -2107,6 +2176,7 @@ class ManagedTable:
                         merged_eq,
                     ).path
                 )
+                eq_manifest_paths.append(written[-1])
             else:
                 eq_manifest_paths = list(parent_eq_paths)
                 if not parent_eq_paths:
@@ -2135,7 +2205,7 @@ class ManagedTable:
             tot_dv = pdv
         if tot_eq is None:
             tot_eq = peq
-        snap = Snapshot(
+        return Snapshot(
             snapshot_id=snapshot_id,
             parent_id=parent.snapshot_id if parent else None,
             timestamp_ms=ts_ms,
@@ -2159,127 +2229,18 @@ class ManagedTable:
             eq_manifest_paths=eq_manifest_paths,
             sequence_number=seq,
             schema_id=self.meta.current_schema_id,
-        )
+        ), written
+
+    def _publish(self, snap: Snapshot, branch: str | None = None) -> None:
+        """Make ``snap`` the head of ``branch`` (main when None) and write
+        the next metadata version; raises CommitConflict when another
+        writer committed first."""
         self.meta.snapshots.append(snap)
         if branch is not None:
             self.meta.refs[branch]["snapshot_id"] = snap.snapshot_id
         else:
             self.meta.current_snapshot_id = snap.snapshot_id
-        try:
-            self._commit_with_retry(snap, op, new_manifest, branch=branch)
-        except Exception:
-            # cleanup-on-failure: a commit that cannot land leaves no
-            # orphaned data files (mirrors the reference's cleanup,
-            # SparkTableOperations.scala:120-149). All of this insert's
-            # files live under one data/<commit-id>/ directory. Callers
-            # whose 'added' files are re-referenced from EXISTING snapshots
-            # (cherry-pick) pass cleanup_on_failure=False — those files
-            # must survive the failed commit.
-            if added and cleanup_on_failure:
-                import shutil
-
-                commit_dir = os.path.join(
-                    self.meta.data_dir,
-                    os.path.relpath(added[0].path, self.meta.data_dir).split(os.sep)[0],
-                )
-                shutil.rmtree(commit_dir, ignore_errors=True)
-            raise
-        return snap
-
-    def _commit_with_retry(
-        self,
-        snap: Snapshot,
-        op: str,
-        new_manifest: str | None,
-        branch: str | None = None,
-    ) -> None:
-        try:
-            self.meta.commit()
-        except CommitConflict:
-            # Optimistic retry for APPENDS (the reference's commit is
-            # retry-able the same way, SparkTableOperations.scala:91-149):
-            # the written data files are untouched; rebase the new manifest
-            # onto the current metadata and re-commit. Overwrites cannot be
-            # rebased blindly — their delete set was computed against a
-            # stale snapshot — so they surface the conflict to the caller.
-            if op != "append":
-                raise
-            for _ in range(5):
-                self.refresh()
-                if branch is not None:
-                    bref = self.meta.refs.get(branch)
-                    if bref is None or bref["type"] != "branch":
-                        raise  # branch dropped concurrently: surface it
-                    parent = self.meta.snapshot_by_id(bref["snapshot_id"])
-                else:
-                    parent = self.meta.current_snapshot()
-                existing_ids = {s.snapshot_id for s in self.meta.snapshots}
-                while snap.snapshot_id in existing_ids:
-                    snap.snapshot_id += 1
-                snap.parent_id = parent.snapshot_id if parent else None
-                # rebase = parent's manifests + ONLY the manifest this commit
-                # wrote (None for an empty append — rebasing with [-1:] of the
-                # stale list would double-count the parent's last manifest)
-                snap.manifest_paths = (parent.manifest_paths if parent else []) + (
-                    [new_manifest] if new_manifest else []
-                )
-                if parent is not None and snap.timestamp_ms <= parent.timestamp_ms:
-                    snap.timestamp_ms = parent.timestamp_ms + 1
-                # merge-on-read state is parent-derived: a stale dv/eq list
-                # would silently DROP a concurrent MoR delete's vectors and
-                # resurrect its rows. Appends carry no deletes of their
-                # own, so the rebase simply adopts the new parent's sets.
-                snap.dv_manifest_paths = (
-                    list(parent.dv_manifest_paths) if parent else []
-                )
-                snap.eq_manifest_paths = (
-                    list(parent.eq_manifest_paths) if parent else []
-                )
-                # the summary's running totals were computed against the
-                # STALE parent — rebase them too, or every rebased append
-                # under-counts the concurrent commits it now sits on top
-                # of (and carries the error forward through the O(1)
-                # incremental chain). Appends delete nothing, so the new
-                # totals are the rebased parent's plus this commit's adds.
-                prec, pfiles, pdv, peq = self._parent_totals(parent)
-                snap.summary["total-records"] = str(
-                    prec + int(snap.summary["added-records"])
-                )
-                snap.summary["total-data-files"] = str(
-                    pfiles + snap.num_added_files
-                )
-                snap.summary["total-position-deletes"] = str(pdv)
-                snap.summary["total-equality-deletes"] = str(peq)
-                # re-derive the data sequence number against the CURRENT
-                # history and restamp the appended files (rewriting this
-                # commit's own manifest — referenced by no one yet), so a
-                # concurrent equality delete whose seq outran our original
-                # number can never mask rows appended after it
-                new_seq = (
-                    max(
-                        (s.sequence_number for s in self.meta.snapshots),
-                        default=0,
-                    )
-                    + 1
-                )
-                if new_seq != snap.sequence_number and new_manifest:
-                    files = Manifest(new_manifest).files()
-                    for f in files:
-                        f.seq = new_seq
-                    Manifest.write(new_manifest, files)
-                snap.sequence_number = new_seq
-                self.meta.snapshots.append(snap)
-                if branch is not None:
-                    self.meta.refs[branch]["snapshot_id"] = snap.snapshot_id
-                else:
-                    self.meta.current_snapshot_id = snap.snapshot_id
-                try:
-                    self.meta.commit()
-                    break
-                except CommitConflict:
-                    continue
-            else:
-                raise
+        self.meta.commit()
 
     # ------------------------------------------------------ maintenance --
 
@@ -3276,12 +3237,7 @@ class ManagedTable:
             sequence_number=parent.sequence_number,
             schema_id=self.meta.current_schema_id,
         )
-        self.meta.snapshots.append(snap)
-        if branch is not None:
-            self.meta.refs[branch]["snapshot_id"] = snap.snapshot_id
-        else:
-            self.meta.current_snapshot_id = snap.snapshot_id
-        self._commit_with_retry(snap, "replace", None, branch=branch)
+        self._publish(snap, branch)
         return {
             "rewritten_manifests": old_n,
             "added_manifests": len(new_paths),
@@ -4162,9 +4118,10 @@ class ManagedTable:
         forward from an earlier commit via manifest reuse). ``snapshot_id``
         is the commit that added the file, recovered from the 1:1
         sequence-number → snapshot mapping the commit protocol maintains
-        (`_commit_snapshot` derives seq as max(history)+1; cherry-picked
-        files keep their SOURCE seq, so they resolve to the staging commit
-        that wrote them — the honest provenance). Reference analogue: the
+        (`_commit_snapshot` derives seq as max(history)+1 and stamps it on
+        every file it adds, cherry-picked files included, so those resolve
+        to the cherry-pick commit, not the staging commit that wrote
+        them). Reference analogue: the
         `$snapshots` suffix-view convention, parsing/IceParser.scala:91-106."""
         snap = self.meta.current_snapshot()
         # seq → the FIRST snapshot that introduced it: metadata-only

@@ -311,3 +311,50 @@ def test_msck_repair_table_discovers_hive_drops(spark, tmp_path):
     assert len(tbl.meta.current_snapshot().live_files()) == len(live)
     # engine-written files still prune + count correctly post-repair
     assert tbl.scan().count_from_stats() == li.count()
+
+
+def test_add_files_pyarrow_nan_bounds_are_dropped(spark, tmp_path):
+    """pyarrow leaves NaN out of a float column's footer min/max, so an
+    imported pyarrow file keeps no float bounds. With them, the planner
+    proved `d <= 5` for every row and answered COUNT(*) = 3 from
+    metadata, where stock Spark over the same file counts 2 (NaN <= 5 is
+    false)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from icebergsql_spark.sql import Engine
+
+    nan = float("nan")
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([1, 2, 3], pa.int32()),
+                "d": pa.array([1.0, nan, 2.0], pa.float64()),
+                "f": pa.array([1.0, nan, 2.0], pa.float32()),
+                "p": pa.array([0, 0, 0], pa.int32()),
+            }
+        ),
+        str(src / "part-0.parquet"),
+    )
+    eng = Engine(spark, str(tmp_path / "wh"))
+    tbl = eng.catalog.create_table(
+        "nan_import", "k int, d double, f float, p int", ["p"]
+    )
+    (imported,) = tbl.add_files(str(src)).live_files()
+    assert (imported.stats["d"].min, imported.stats["d"].max) == (None, None)
+    assert (imported.stats["f"].min, imported.stats["f"].max) == (None, None)
+    assert imported.stats["k"].max == 3  # non-float bounds still prune
+    spark.read.parquet(str(src)).createOrReplaceTempView("nan_import_stock")
+    for c in ("d", "f"):
+        for q in (
+            f"SELECT COUNT(*) FROM {{t}} WHERE {c} <= 5",
+            f"SELECT COUNT(*) FROM {{t}} WHERE NOT ({c} > 5)",
+            f"SELECT k FROM {{t}} WHERE {c} >= 1 ORDER BY k",
+            f"SELECT k FROM {{t}} WHERE {c} > 5",
+        ):
+            got = eng.sql(q.format(t="nan_import")).collect()
+            want = spark.sql(q.format(t="nan_import_stock")).collect()
+            assert [tuple(r) for r in got] == [tuple(r) for r in want], q
+    assert eng.sql("SELECT COUNT(*) FROM nan_import WHERE d <= 5").collect()[0][0] == 2

@@ -3,9 +3,10 @@ and the equality-delete sequence-number invariant under contention.
 
 The commit protocol is optimistic concurrency via exclusive metadata-file
 creation (catalog/metadata.py::TableMetadata.commit) with an append-only
-rebase loop (table.py::_commit_with_retry) — the same shape as the
-reference's SparkTableOperations.scala:91-149 (retryable appends, cleanup
-on terminal failure). These tests drive TWO ManagedTable handles on one
+retry loop in table.py::_commit_snapshot that derives the snapshot again
+from the refreshed head — the same shape as the reference's
+SparkTableOperations.scala:91-149 (retryable appends, cleanup on terminal
+failure). These tests drive TWO ManagedTable handles on one
 table location and interleave their commits deterministically: handle B
 computes its parent/files against a base that handle A then moves, so B's
 first commit attempt always hits CommitConflict and must rebase.
@@ -18,6 +19,8 @@ Invariants locked here:
 - data sequence numbers stay strictly increasing across the interleave,
   and a rebased append's files are restamped ABOVE a concurrent equality
   delete's seq, so the eq delete can never mask rows appended after it;
+- a rebased append deletes its failed attempt's manifests, so none is
+  left orphaned;
 - non-append operations (overwrite) surface the conflict to the caller
   instead of rebasing a stale delete set.
 """
@@ -110,8 +113,8 @@ def test_contended_append_after_eq_delete_respects_seq(spark, tmp_path):
     # the rebase restamped B's files ABOVE the eq delete's seq, so the
     # delete (strictly-lower rule) cannot mask the fresh rows
     assert snap_b.sequence_number > eq_seq
-    # the rebase restamps the on-disk manifest (the authoritative record;
-    # the caller's in-memory DataFile list is not touched)
+    # the rebase writes a fresh manifest with the restamped seq (the
+    # on-disk manifest is the authoritative record)
     tbl_a.refresh()
     seq_by_path = {
         f.path: f.seq
@@ -176,8 +179,8 @@ def test_interleaved_append_fuzz(spark, tmp_path):
 
 def test_three_writer_interleave_fuzz(spark, tmp_path):
     """Three handles on one table, each committing against a base the
-    OTHER TWO have already moved: every attempt rebases through two
-    conflicts in _commit_with_retry, no rows are lost, sequence numbers
+    OTHER TWO have already moved: every attempt rebases in
+    _commit_snapshot, no rows are lost, sequence numbers
     stay strictly increasing, and every snapshot's running totals equal
     a full replay of its lineage."""
     wh = str(tmp_path / "wh")
@@ -212,6 +215,40 @@ def test_three_writer_interleave_fuzz(spark, tmp_path):
             f.record_count for f in s.live_files()
         )
         assert int(s.summary["total-data-files"]) == len(s.live_files())
+
+
+def test_contended_append_leaves_no_orphan_manifest(spark, tmp_path):
+    """The three-writer shape, one round: the writer's first attempt
+    conflicts and its manifest is deleted, so afterwards every manifest
+    file under metadata/ is referenced by some snapshot."""
+    import glob
+    import os
+
+    wh = str(tmp_path / "wh")
+    Catalog(spark, wh).create_table("race_orphan", DDL, ["part"])
+    writer, other_a, other_b = (
+        Catalog(spark, wh).load_table("race_orphan") for _ in range(3)
+    )
+    writer.insert(_rows(spark, 0, 10))
+    writer.refresh()
+    parent = writer.meta.current_snapshot()
+    added = writer._distributed_write(_rows(spark, 1000, 1010))
+    other_a.insert(_rows(spark, 1100, 1105))
+    other_b.insert(_rows(spark, 1200, 1207))
+    snap = writer._commit_snapshot(parent, added, [])
+    assert snap.parent_id != parent.snapshot_id  # it did rebase
+
+    writer.refresh()
+    referenced = {
+        p
+        for s in writer.meta.snapshots
+        for p in s.manifest_paths + s.dv_manifest_paths + s.eq_manifest_paths
+    }
+    on_disk = set(
+        glob.glob(os.path.join(writer.meta.metadata_dir, "*manifest-*"))
+    )
+    assert on_disk == referenced
+    assert writer.to_df().count() == 10 + 10 + 5 + 7
 
 
 def test_fast_forward_racing_main_append_refuses(spark, tmp_path):

@@ -91,8 +91,8 @@ def test_append_on_dv_heavy_table_reads_no_delete_manifests(
     spark, tmp_path, monkeypatch
 ):
     """The hot path: a plain append on a table carrying DV and eq
-    manifests must not open a single delete manifest (the O(1) claim,
-    asserted rather than trusted)."""
+    manifests must not open a single manifest, data or delete (the O(1)
+    claim, asserted rather than trusted)."""
     cat = Catalog(spark, str(tmp_path / "wh"))
     tbl = cat.create_table(
         "fast",
@@ -124,8 +124,15 @@ def test_append_on_dv_heavy_table_reads_no_delete_manifests(
         opened.append(path)
         real_eq_init(self, path)
 
+    real_files = Manifest.files
+
+    def spy_files(self):
+        opened.append(self.path)
+        return real_files(self)
+
     monkeypatch.setattr(DVManifest, "__init__", spy_dv)
     monkeypatch.setattr(EqManifest, "__init__", spy_eq)
+    monkeypatch.setattr(Manifest, "files", spy_files)
     tbl.insert(
         spark.range(200, 210).select(
             F.col("id").alias("k"),
@@ -134,7 +141,7 @@ def test_append_on_dv_heavy_table_reads_no_delete_manifests(
         )
     )
     monkeypatch.undo()
-    assert opened == [], "plain append walked delete manifests"
+    assert opened == [], "plain append walked manifests"
     after = tbl.meta.current_snapshot()
     # delete totals carried forward verbatim; record totals advanced
     assert _summary_totals(after)[2:] == before[2:]
