@@ -29,6 +29,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from decimal import Decimal
+from functools import cached_property
 from typing import Any
 
 
@@ -377,6 +378,45 @@ class EqManifest:
         return cls(path, list(entries))
 
 
+class DeleteSet:
+    """The merge-on-read deletes of one snapshot that apply to one file set
+    (Iceberg v2) — the one home of the rule every reader, DV writer,
+    converter and count uses. A DV applies to the file it names, and its
+    ``count`` is additive; an equality delete masks only rows of files
+    with a LOWER seq than its own. Each side reads its manifests on first
+    use, so a caller that decides on one side never pays for the other."""
+
+    def __init__(self, snapshot: "Snapshot", files: list[DataFile]):
+        self._snapshot = snapshot
+        self._files = files
+
+    @cached_property
+    def dvs(self) -> list[DeleteVectorEntry]:
+        if not self._files:
+            return []
+        paths = {f.path for f in self._files}
+        return [e for e in self._snapshot.dv_entries() if e.data_path in paths]
+
+    @cached_property
+    def eqs(self) -> list[EqualityDeleteEntry]:
+        if not self._files:
+            return []
+        low = min(f.seq for f in self._files)
+        return [e for e in self._snapshot.eq_entries() if e.seq > low]
+
+    @cached_property
+    def dv_counts(self) -> dict[str, int]:
+        """data path → deleted row count (Σ over its DVs)."""
+        counts: dict[str, int] = {}
+        for e in self.dvs:
+            counts[e.data_path] = counts.get(e.data_path, 0) + e.count
+        return counts
+
+    def eqs_masking(self, f: DataFile) -> list[EqualityDeleteEntry]:
+        """The equality deletes that mask rows of ``f``."""
+        return [e for e in self.eqs if e.seq > f.seq]
+
+
 @dataclass
 class Snapshot:
     snapshot_id: int
@@ -420,6 +460,9 @@ class Snapshot:
         for p in self.eq_manifest_paths:
             out.extend(EqManifest(p).entries())
         return out
+
+    def deletes(self, files: list[DataFile]) -> DeleteSet:
+        return DeleteSet(self, files)
 
     def to_json(self):
         d = {
@@ -514,6 +557,20 @@ class TableMetadata:
 
     def schema_json_at(self, schema_id: int) -> str:
         return self.schemas[schema_id]["schema_json"]
+
+    def rename_map(self, schema_id: int) -> dict[str, str] | None:
+        """era-name → current-name for field ids alive in both schemas, or
+        None when the era IS current (identity). Strictly id-driven: a
+        dead id's name never maps, so stats of dropped columns are inert."""
+        cur_id = self.current_schema_id
+        if schema_id == cur_id:
+            return None
+        cur_by_id = {i: n for n, i in self.field_ids_at(cur_id).items()}
+        return {
+            old_name: cur_by_id[fid]
+            for old_name, fid in self.field_ids_at(schema_id).items()
+            if fid in cur_by_id
+        }
 
     def evolve_schema(self, schema_json: str, fields: dict[str, int]) -> None:
         """Append a new schema version and make it current (caller commits)."""

@@ -69,7 +69,6 @@ from pyspark.sql.types import StructType
 
 from icebergsql_spark import expressions as X
 from icebergsql_spark.catalog.metadata import (
-    ColStats,
     DataFile,
     TableMetadata,
     added_files_between,
@@ -117,7 +116,7 @@ class _FileTask(InputPartition):
         self.eq_tasks = eq_tasks
 
 
-def _era_columns(meta: TableMetadata, schema: StructType, schema_id: int,
+def _era_columns(schema: StructType,
                  rename_map: dict[str, str] | None) -> list[tuple[str, str | None]]:
     """(target_name, source_name_in_file | None) per current-schema field,
     mirroring ManagedTable.read_files' field-id translation."""
@@ -125,41 +124,6 @@ def _era_columns(meta: TableMetadata, schema: StructType, schema_id: int,
         return [(f.name, f.name) for f in schema.fields]
     inv = {cur: old for old, cur in rename_map.items()}
     return [(f.name, inv.get(f.name)) for f in schema.fields]
-
-
-def _rename_map(meta: TableMetadata, schema_id: int) -> dict[str, str] | None:
-    """old-era name -> current name via field ids (None = identical era).
-    Same contract as ManagedTable.rename_map_for, computed from metadata
-    alone so the data source needs no SparkSession-bound table object."""
-    if schema_id == meta.current_schema_id:
-        return None
-    old_ids = meta.field_ids_at(schema_id)
-    cur_ids = meta.field_ids_at(meta.current_schema_id)
-    by_id = {fid: name for name, fid in cur_ids.items()}
-    return {old: by_id[fid] for old, fid in old_ids.items() if fid in by_id}
-
-
-def _pruning_stats(meta: TableMetadata, schema: StructType, f: DataFile) -> dict[str, ColStats]:
-    """Footer + partition point-range stats under CURRENT column names
-    (same translation as ManagedScan._pruning_stats)."""
-    from icebergsql_spark.table import _parse_partition_value
-
-    rmap = _rename_map(meta, f.schema_id)
-    if rmap is None:
-        stats = dict(f.stats)
-    else:
-        stats = {rmap[c]: s for c, s in f.stats.items() if c in rmap}
-    for pc, raw in f.partition.items():
-        if rmap is not None:
-            pc = rmap.get(pc)
-            if pc is None:
-                continue
-        if raw is None:
-            stats[pc] = ColStats(None, None, f.record_count, f.record_count)
-        else:
-            typed = _parse_partition_value(raw, schema[pc].dataType)
-            stats[pc] = ColStats(typed, typed, 0, f.record_count)
-    return stats
 
 
 def _filters_to_pred(filters: list[Filter]) -> X.Pred:
@@ -211,30 +175,29 @@ def _one_filter(flt: Filter) -> X.Pred:
 
 def _plan_tasks(meta: TableMetadata, schema: StructType, files: list[DataFile],
                 pred: X.Pred, snapshot=None) -> list[_FileTask]:
+    from icebergsql_spark.table import pruning_stats
+
     arrow_bytes = to_arrow_schema(schema).serialize().to_pybytes()
+    deletes = snapshot.deletes(files) if snapshot is not None else None
     dv_by_file: dict[str, list[str]] = {}
-    eqs = []
-    if snapshot is not None:
-        for e in snapshot.dv_entries():
-            dv_by_file.setdefault(e.data_path, []).append(e.dv_path)
-        eqs = snapshot.eq_entries()
+    for e in deletes.dvs if deletes else []:
+        dv_by_file.setdefault(e.data_path, []).append(e.dv_path)
     tasks: list[_FileTask] = []
     for f in files:
+        rmap = meta.rename_map(f.schema_id)
         if not isinstance(pred, (X.AlwaysTrue, X.Residual)) and not X.may_match(
-            pred, _pruning_stats(meta, schema, f)
+            pred, pruning_stats(f, schema, rmap)
         ):
             continue
-        rmap = _rename_map(meta, f.schema_id)
         tasks.append(
             _FileTask(
                 f.path,
-                _era_columns(meta, schema, f.schema_id, rmap),
+                _era_columns(schema, rmap),
                 arrow_bytes,
                 dv_paths=tuple(sorted(dv_by_file.get(f.path, ()))),
                 eq_tasks=tuple(
                     (e.eq_path, tuple(e.key_cols))
-                    for e in eqs
-                    if f.seq < e.seq
+                    for e in (deletes.eqs_masking(f) if deletes else ())
                 ),
             )
         )
@@ -564,7 +527,9 @@ def _write_task(out_root: str, partition_cols: list[str], schema_id: int,
     out: list[DataFile] = []
     for w, path, pdict in writers.values():
         w.close()
-        n_rows, size, stats = file_stats(path)
+        # pyarrow leaves NaN out of float min/max: read the footer as an
+        # outside writer's, whose float bounds are not trusted
+        n_rows, size, stats = file_stats(path, imported=True)
         out.append(
             DataFile(
                 path=path,

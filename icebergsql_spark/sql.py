@@ -735,14 +735,7 @@ class Engine:
                     for f in (snap.live_files() if snap else [])
                 }
             )
-            if not parts:
-                return self._status_df([], "partition string")
-            values = ", ".join(
-                "('" + p.replace("'", "''") + "')" for p in parts
-            )
-            return self.spark.sql(
-                f"SELECT * FROM VALUES {values} AS t(`partition`)"
-            )
+            return self._status_df([(p,) for p in parts], "partition string")
 
         tr = re.match(
             r"^\s*truncate\s+table\s+`?(?P<name>\w+)`?\s*$", text, re.IGNORECASE

@@ -1233,51 +1233,25 @@ class ManagedTable:
                 f"(_metadata.row_index); table format is {self.file_format} "
                 "— equality deletes stay mask-at-read on this table"
             )
-        eqs = parent.eq_entries()
-        max_seq = max(e.seq for e in eqs)
-        affected = [f for f in parent.live_files() if f.seq < max_seq]
+        live = parent.live_files()
+        deletes = parent.deletes(live)
+        affected = [f for f in live if deletes.eqs_masking(f)]
         if not affected:
             return self._commit_snapshot(
                 parent, [], [], operation="replace", drop_eq=True
             )
-        spark = self.spark
-        df = self.read_files(affected, with_pos=True)
-        # VALUES LocalRelation, not a Python-RDD createDataFrame: this
-        # broadcast build side would otherwise launch a 32-partition
-        # Python-runner job per maintenance call (the r10 lesson)
-        seq_map = _values_local_df(
-            spark, [(f.path, f.seq) for f in affected],
-            "__fp string, __fseq long",
+        df, key_rels = self._eq_key_relations(
+            self.read_files(affected, with_pos=True),
+            affected,
+            deletes.eqs,
+            parent.schema_id,
         )
-        df = df.join(F.broadcast(seq_map), "__fp", "left")
-        by_keycols: dict[tuple, list] = {}
-        for e in eqs:
-            by_keycols.setdefault(tuple(e.key_cols), []).append(e)
-        masked_parts = []
-        cur_schema = self.schema
-        for key_cols, entries in sorted(by_keycols.items()):
-            # pinned read schema (current-era types; key renames/drops are
-            # guarded, widenings promote) — skips the per-entry
-            # schema-inference job
-            eq_schema = T.StructType([cur_schema[c] for c in key_cols])
-            parts = [
-                spark.read.schema(eq_schema)
-                .parquet(e.eq_path)
-                .select(*key_cols)
-                .withColumn("__eqseq", F.lit(e.seq).cast("long"))
-                for e in entries
-            ]
-            eq_df = parts[0]
-            for p in parts[1:]:
-                eq_df = eq_df.unionByName(p)
-            eq_df = eq_df.groupBy(*key_cols).agg(
-                F.max("__eqseq").alias("__eqseq")
-            )
-            masked_parts.append(
-                df.join(eq_df, list(key_cols))
-                .filter(F.col("__eqseq") > F.col("__fseq"))
-                .select("__fp", "__pos")
-            )
+        masked_parts = [
+            df.join(eq_df, names)
+            .filter(F.col("__eqseq") > F.col("__fseq"))
+            .select("__fp", "__pos")
+            for names, eq_df in key_rels
+        ]
         masked = masked_parts[0]
         for p in masked_parts[1:]:
             masked = masked.unionByName(p)
@@ -1305,18 +1279,11 @@ class ManagedTable:
         count, not row count)."""
         from icebergsql_spark.catalog.metadata import DeleteVectorEntry
 
-        prior = [
-            e
-            for e in parent.dv_entries()
-            if e.data_path in {f.path for f in files}
-        ]
+        prior = parent.deletes(files).dvs
         if prior:
-            prior_df = (
-                self.spark.read.schema(_DV_ROWSET_SCHEMA)
-                .parquet(*sorted({e.dv_path for e in prior}))
-                .select(F.col("path").alias("__fp"), F.col("pos").alias("__pos"))
+            matched = matched.join(
+                self._dv_positions(prior), ["__fp", "__pos"], "left_anti"
             )
-            matched = matched.join(prior_df, ["__fp", "__pos"], "left_anti")
         # dedupe HERE, not at call sites: a duplicate (file, pos) — e.g.
         # merge(cardinality_check=False) with duplicate source keys —
         # would inflate DeleteVectorEntry.count and break the exact
@@ -2395,21 +2362,6 @@ class ManagedTable:
         ]
         self._evolve(fields, ids)
 
-    def rename_map_for(self, schema_id: int) -> dict[str, str] | None:
-        """era-name → current-name for field ids alive in both schemas, or
-        None when the era IS current (identity). Strictly id-driven: a
-        dead id's name never maps, so stats of dropped columns are inert."""
-        cur_id = self.meta.current_schema_id
-        if schema_id == cur_id:
-            return None
-        old_ids = self.meta.field_ids_at(schema_id)
-        cur_by_id = {i: n for n, i in self.meta.field_ids_at(cur_id).items()}
-        return {
-            old_name: cur_by_id[fid]
-            for old_name, fid in old_ids.items()
-            if fid in cur_by_id
-        }
-
     def read_files(
         self,
         files: list["DataFile"],
@@ -2472,7 +2424,7 @@ class ManagedTable:
             by_grp, key=lambda k: (k[0], k[1] is not None, repr(k[1]))
         ):
             grp_paths = by_grp[(sid, pkey)]
-            rmap = self.rename_map_for(sid)
+            rmap = self.meta.rename_map(sid)
             era = T.StructType.fromJson(
                 __import__("json").loads(self.meta.schema_json_at(sid))
             )
@@ -2545,53 +2497,64 @@ class ManagedTable:
             snapshot = self.meta.current_snapshot()
         if snapshot is None:
             return self.read_files(files)
-        paths = {f.path for f in files}
-        dvs = [e for e in snapshot.dv_entries() if e.data_path in paths]
-        eqs = [
-            e
-            for e in snapshot.eq_entries()
-            if any(f.seq < e.seq for f in files)
-        ]
-        if not dvs and not eqs:
+        deletes = snapshot.deletes(files)
+        if not deletes.dvs and not deletes.eqs:
             return self.read_files(files)
         # equality-delete-only masking needs just __fp (works on any
         # format); __pos (_metadata.row_index, parquet-only) is requested
         # only when position DVs actually apply
-        df = self.read_files(files, with_pos=bool(dvs), with_fp=True)
-        if dvs:
-            dv_df = (
-                self.spark.read.schema(_DV_ROWSET_SCHEMA)
-                .parquet(*sorted({e.dv_path for e in dvs}))
-                .select(F.col("path").alias("__fp"), F.col("pos").alias("__pos"))
+        df = self.read_files(files, with_pos=bool(deletes.dvs), with_fp=True)
+        if deletes.dvs:
+            df = df.join(
+                self._dv_positions(deletes.dvs), ["__fp", "__pos"], "left_anti"
             )
-            df = df.join(dv_df, ["__fp", "__pos"], "left_anti")
-        if eqs:
-            df = self._apply_eq_deletes(df, files, eqs, snapshot.schema_id)
+        if deletes.eqs:
+            # survivors: no outranking delete of the row's key
+            df, key_rels = self._eq_key_relations(
+                df, files, deletes.eqs, snapshot.schema_id
+            )
+            for names, eq_df in key_rels:
+                df = df.join(eq_df, names, "left").filter(
+                    F.col("__eqseq").isNull()
+                    | (F.col("__eqseq") <= F.col("__fseq"))
+                ).drop("__eqseq")
+            df = df.drop("__fseq")
         return df.drop("__fp", "__pos")  # drop ignores an absent __pos
 
-    def _apply_eq_deletes(
+    def _dv_positions(self, dvs: list) -> DataFrame:
+        """The (``__fp``, ``__pos``) rowset of the delete vectors ``dvs``,
+        read with its schema pinned."""
+        return (
+            self.spark.read.schema(_DV_ROWSET_SCHEMA)
+            .parquet(*sorted({e.dv_path for e in dvs}))
+            .select(F.col("path").alias("__fp"), F.col("pos").alias("__pos"))
+        )
+
+    def _eq_key_relations(
         self,
         df: DataFrame,
         files: list["DataFile"],
         eqs: list,
         schema_id: int | None,
-    ) -> DataFrame:
-        """Mask rows whose key appears in an equality-delete rowset with a
-        HIGHER sequence number than the row's data file. Per key-column
-        set: union the rowsets (each stamped with its entry's seq), keep
-        max seq per key (one row per deleted key — the build side is
-        delete churn, broadcastable), left-join on the keys and filter
-        ``max_eq_seq <= file_seq`` survivors. SQL equality: NULL keys
-        never match (CDC keys are non-null by construction).
+    ) -> tuple[DataFrame, list[tuple[list[str], DataFrame]]]:
+        """The equality-delete side of a mask over ``df`` (rows of
+        ``files`` carrying ``__fp``): ``df`` left-joined to each row's
+        file sequence number ``__fseq``, and per key-column set the
+        current key names with the union of its delete rowsets, each row
+        stamped with its entry's seq, reduced to the max ``__eqseq`` per
+        key (one row per deleted key — the build side is delete churn,
+        broadcastable). A row is masked iff its key joins with
+        ``__eqseq > __fseq``; callers join and filter. SQL equality: NULL
+        keys never match (CDC keys are non-null by construction).
 
         Entries key on the column names of the snapshot's schema era
         (``schema_id``); a key renamed since — legal once conversion
         cleared the entry from the current snapshot — resolves to its
         current name through the field ids."""
         spark = self.spark
-        # VALUES LocalRelation (see convert_equality_deletes note): this
-        # runs on EVERY masked read with eq entries — a Python-RDD local
-        # frame here costs a Python-runner broadcast job per action
+        # VALUES LocalRelation, not a Python-RDD createDataFrame: this
+        # broadcast build side runs on EVERY masked read with eq entries,
+        # where a Python local frame costs a Python-runner job per action
         seq_map = _values_local_df(
             spark, [(f.path, f.seq) for f in files],
             "__fp string, __fseq long",
@@ -2602,7 +2565,8 @@ class ManagedTable:
             by_keycols.setdefault(tuple(e.key_cols), []).append(e)
         cur_schema = self.schema
         cur_names = set(cur_schema.names)
-        rmap = self.rename_map_for(schema_id) if schema_id is not None else None
+        rmap = self.meta.rename_map(schema_id) if schema_id is not None else None
+        key_rels = []
         for key_cols, entries in sorted(by_keycols.items()):
             names = [c if rmap is None else rmap.get(c) for c in key_cols]
             gone = [c for c, n in zip(key_cols, names) if n not in cur_names]
@@ -2612,9 +2576,8 @@ class ManagedTable:
                     "exist in the table schema; its masked rows cannot be "
                     "resolved"
                 )
-            # pinned read schema — see convert_equality_deletes; this path
-            # runs on EVERY masked read with eq entries, so the inference
-            # job it skips repeated per entry per action
+            # pinned read schema (current-era types; widenings promote):
+            # skips a schema-inference job per entry per action
             eq_schema = T.StructType(
                 [
                     T.StructField(c, cur_schema[n].dataType)
@@ -2631,42 +2594,22 @@ class ManagedTable:
             eq_df = parts[0]
             for p in parts[1:]:
                 eq_df = eq_df.unionByName(p)
-            eq_df = eq_df.groupBy(*names).agg(
-                F.max("__eqseq").alias("__eqseq")
-            )
-            df = df.join(eq_df, names, "left").filter(
-                F.col("__eqseq").isNull()
-                | (F.col("__eqseq") <= F.col("__fseq"))
-            ).drop("__eqseq")
-        return df.drop("__fseq")
+            eq_df = eq_df.groupBy(*names).agg(F.max("__eqseq").alias("__eqseq"))
+            key_rels.append((names, eq_df))
+        return df, key_rels
 
     def live_row_count(self, snapshot: Snapshot | None = None) -> int:
-        """Exact LIVE row count under merge-on-read masks: manifest
-        record_count minus position-DV counts (exact by the writer
-        dedupe invariant); when unconverted equality deletes could mask
-        lower-seq files the count is not metadata-decidable, so fall
-        back to one distributed count over the masked read. Used by
+        """Exact LIVE row count under merge-on-read masks: the metadata
+        count (``ManagedScan.count_from_stats``) when it is decidable,
+        else one distributed count over the masked read. Used by
         TRUNCATE/DELETE row reporting so deleted_rows never overstates."""
         if snapshot is None:
             snapshot = self.meta.current_snapshot()
-        if snapshot is None:
-            return 0
-        files = snapshot.live_files()
-        if not files:
-            return 0
-        live_paths = {f.path for f in files}
-        eqs = snapshot.eq_entries()
-        if eqs:
-            max_eq = max(e.seq for e in eqs)
-            if any(f.seq < max_eq for f in files):
-                return self.read_files_live(files, snapshot).count()
-        total = sum(f.record_count for f in files)
-        dv = sum(
-            e.count
-            for e in snapshot.dv_entries()
-            if e.data_path in live_paths
-        )
-        return total - dv
+        scan = ManagedScan(self, snapshot, None)
+        n = scan.count_from_stats()
+        if n is None:
+            n = self.read_files_live(scan.planned_files, snapshot).count()
+        return n
 
     def set_properties(
         self,
@@ -3140,8 +3083,9 @@ class ManagedTable:
         parent = self.meta.current_snapshot()
         if parent is None or not parent.dv_manifest_paths:
             return None
-        dvd_paths = {e.data_path for e in parent.dv_entries()}
-        targets = [f for f in parent.live_files() if f.path in dvd_paths]
+        live = parent.live_files()
+        dv_counts = parent.deletes(live).dv_counts
+        targets = [f for f in live if f.path in dv_counts]
         if not targets:
             return None
         live = self.read_files_live(targets, parent)
@@ -3556,17 +3500,19 @@ class ManagedTable:
                     rows.extend((f.path,) for f in _Manifest(mp).files())
                 yield pd.DataFrame(rows, columns=["path"])
 
+        # VALUES LocalRelations, not createDataFrame frames, which plan a
+        # Python-RDD scan; the repartition still fans the work out
         if manifest_paths:
             ref_df = (
-                spark.createDataFrame(
-                    [(p,) for p in manifest_paths], "mpath string"
+                _values_local_df(
+                    spark, [(p,) for p in manifest_paths], "mpath string"
                 )
                 .repartition(min(len(manifest_paths), 32))
                 .mapInPandas(read_manifests, "path string")
                 .distinct()
             )
         else:
-            ref_df = spark.createDataFrame([], "path string")
+            ref_df = _values_local_df(spark, [], "path string")
 
         def list_files(batches):
             for pdf in batches:
@@ -3583,7 +3529,7 @@ class ManagedTable:
                 yield pd.DataFrame(rows, columns=["path", "mtime"])
 
         listing = (
-            spark.createDataFrame([(d,) for d in subdirs], "root string")
+            _values_local_df(spark, [(d,) for d in subdirs], "root string")
             .repartition(min(len(subdirs), 32))
             .mapInPandas(list_files, "path string, mtime double")
         )
@@ -4067,9 +4013,8 @@ class ManagedTable:
         replaces the reference's reflection-based test introspection
         (utils/utils.scala:43-69)."""
         snap = self.meta.current_snapshot()
-        dv_counts: dict[str, int] = {}
-        for e in snap.dv_entries() if snap else []:
-            dv_counts[e.data_path] = dv_counts.get(e.data_path, 0) + e.count
+        files = snap.live_files() if snap else []
+        dv_counts = snap.deletes(files).dv_counts if snap else {}
         rows = [
             (
                 f.path,
@@ -4078,7 +4023,7 @@ class ManagedTable:
                 f.file_size,
                 dv_counts.get(f.path, 0),
             )
-            for f in (snap.live_files() if snap else [])
+            for f in files
         ]
         return _values_local_df(self.spark, 
             rows,
@@ -4092,11 +4037,10 @@ class ManagedTable:
         manifest list — answers "how skewed is this table?" without
         touching a single data file."""
         snap = self.meta.current_snapshot()
-        dv_counts: dict[str, int] = {}
-        for e in snap.dv_entries() if snap else []:
-            dv_counts[e.data_path] = dv_counts.get(e.data_path, 0) + e.count
+        files = snap.live_files() if snap else []
+        dv_counts = snap.deletes(files).dv_counts if snap else {}
         agg: dict[str, list[int]] = {}
-        for f in snap.live_files() if snap else []:
+        for f in files:
             key = __import__("json").dumps(f.partition, sort_keys=True)
             a = agg.setdefault(key, [0, 0, 0, 0])
             a[0] += 1
@@ -4264,30 +4208,9 @@ class ManagedScan:
         self.planned_files: list[DataFile] = self._plan()
 
     def _pruning_stats(self, f: DataFile) -> dict[str, ColStats]:
-        """Footer + partition point-range stats under CURRENT column names:
-        an old-era file's stat keys are translated via the field-id rename
-        map; stats of dropped columns (dead ids) are discarded, so a
-        re-added name can never be mis-pruned by a dead column's bounds."""
-        schema = self._schema
         if f.schema_id not in self._rmaps:
-            self._rmaps[f.schema_id] = self.table.rename_map_for(f.schema_id)
-        rmap = self._rmaps[f.schema_id]
-        if rmap is None:
-            stats = dict(f.stats)
-        else:
-            stats = {rmap[c]: s for c, s in f.stats.items() if c in rmap}
-        # partition dir values are exact: encode as point-range stats
-        for pc, raw in f.partition.items():
-            if rmap is not None:
-                pc = rmap.get(pc)
-                if pc is None:
-                    continue  # partition column since dropped
-            if raw is None:
-                stats[pc] = ColStats(None, None, f.record_count, f.record_count)
-            else:
-                typed = _parse_partition_value(raw, schema[pc].dataType)
-                stats[pc] = ColStats(typed, typed, 0, f.record_count)
-        return stats
+            self._rmaps[f.schema_id] = self.table.meta.rename_map(f.schema_id)
+        return pruning_stats(f, self._schema, self._rmaps[f.schema_id])
 
     def _plan(self) -> list[DataFile]:
         if self.snapshot is None:
@@ -4318,20 +4241,16 @@ class ManagedScan:
 
         if self.snapshot is None:
             return 0
+        deletes = self.snapshot.deletes(self.planned_files)
+        # an un-converted equality delete may mask an unknown number of a
+        # lower-seq file's rows — the count is undecidable from metadata
+        if deletes.eqs:
+            return None
         # merge-on-read position deletes subtract exactly: a DV'd file's
         # live count is record_count - Σdv_count (writers de-duplicate
         # positions, so counts are additive), and a predicate proven for
         # ALL of the file's rows holds for the live subset too
-        dv_counts: dict[str, int] = {}
-        for e in self.snapshot.dv_entries():
-            dv_counts[e.data_path] = dv_counts.get(e.data_path, 0) + e.count
-        # an un-converted equality delete may mask an unknown number of a
-        # lower-seq file's rows — the count is undecidable from metadata
-        eq_seqs = [e.seq for e in self.snapshot.eq_entries()]
-        if eq_seqs:
-            max_eq = max(eq_seqs)
-            if any(f.seq < max_eq for f in self.planned_files):
-                return None
+        dv_counts = deletes.dv_counts
         total = 0
         for f in self.planned_files:
             if not isinstance(self.augmented, AlwaysTrue) and not must_match_all(
@@ -4477,6 +4396,32 @@ def _zvalue_rank_column(
     return functools.reduce(operator.add, parts).alias("__zvalue")
 
 
+def pruning_stats(
+    f: DataFile, schema: T.StructType, rmap: dict[str, str] | None
+) -> dict[str, ColStats]:
+    """Footer + partition point-range stats of ``f`` under CURRENT column
+    names (``schema``): an old-era file's stat keys are translated via its
+    field-id rename map ``rmap`` (``TableMetadata.rename_map``); stats of
+    dropped columns (dead ids) are discarded, so a re-added name can never
+    be mis-pruned by a dead column's bounds."""
+    if rmap is None:
+        stats = dict(f.stats)
+    else:
+        stats = {rmap[c]: s for c, s in f.stats.items() if c in rmap}
+    # partition dir values are exact: encode as point-range stats
+    for pc, raw in f.partition.items():
+        if rmap is not None:
+            pc = rmap.get(pc)
+            if pc is None:
+                continue  # partition column since dropped
+        if raw is None:
+            stats[pc] = ColStats(None, None, f.record_count, f.record_count)
+        else:
+            typed = _parse_partition_value(raw, schema[pc].dataType)
+            stats[pc] = ColStats(typed, typed, 0, f.record_count)
+    return stats
+
+
 def _parse_partition_value(raw: str, dtype: T.DataType):
     import datetime as _dt
 
@@ -4533,13 +4478,17 @@ def _values_local_df(spark, rows, schema: str):
     the managed_metadata_count lesson, in join form (measured 20s for a
     ~10-row metadata compare at round 10).  A ``VALUES`` list folds to
     a single-partition LocalTableScan: broadcastable, re-referenceable,
-    zero Python workers.  Falls back to ``createDataFrame`` for any
-    value outside the scalar types the renderer handles; every column
-    is CAST to the declared type so all-NULL columns keep their schema.
-    Empty input (VALUES needs a row) becomes a typed zero-row filtered
-    OneRowRelation — the createDataFrame fallback planned a Python-RDD
-    scan with defaultParallelism EMPTY slices, one Python-runner job
-    per consumer action."""
+    zero Python workers.  Falls back to ``createDataFrame`` for a type
+    outside the scalar types the renderer handles; every column is CAST
+    to the declared type so all-NULL columns keep their schema.  Empty
+    input (VALUES needs a row) becomes a typed zero-row filtered
+    OneRowRelation.
+
+    Strings are rendered as hex bytes, ``CAST(X'..' AS STRING)``: a
+    quoted literal would pass through the parser's escape rules, which
+    ``spark.sql.parser.escapedStringLiterals`` switches, and through
+    ``${...}`` variable substitution, so a path holding ``'``, ``\\``
+    or ``${`` would come back changed."""
     cols = []
     for part in schema.split(","):
         name, typ = part.strip().rsplit(" ", 1)
@@ -4562,27 +4511,17 @@ def _values_local_df(spark, rows, schema: str):
             return str(int(v))
         if t in ("DOUBLE", "FLOAT"):
             f = float(v)
-            if not math.isfinite(f):
-                # inf/nan have no SQL literal form; ValueError routes
-                # the whole frame to the createDataFrame fallback below
-                raise ValueError(f"non-finite float literal: {f!r}")
-            if f == 0.0 and math.copysign(1.0, f) < 0:
-                # the SQL parser folds the numeric literal -0.0 to +0.0;
-                # a string cast preserves the sign bit
-                return "CAST('-0.0' AS DOUBLE)"
+            if not math.isfinite(f) or (f == 0.0 and math.copysign(1.0, f) < 0):
+                # inf/nan have no numeric literal form, and the parser
+                # folds the literal -0.0 to +0.0; a string cast keeps both
+                return f"CAST('{f!r}' AS DOUBLE)"
             return repr(f)
-        s = str(v).replace("\\", "\\\\").replace("'", "''")
-        return f"'{s}'"
+        return f"CAST(X'{str(v).encode().hex()}' AS STRING)"
 
-    try:
-        values = ", ".join(
-            "("
-            + ", ".join(lit(v, t) for v, (_n, t) in zip(row, cols))
-            + ")"
-            for row in rows
-        )
-    except (TypeError, ValueError):
-        return spark.createDataFrame(rows, schema)
+    values = ", ".join(
+        "(" + ", ".join(lit(v, t) for v, (_n, t) in zip(row, cols)) + ")"
+        for row in rows
+    )
     # Note: VALUES infers non-NULLABLE fields when a column's literals
     # are all non-null (createDataFrame reported nullable) — a strictly
     # more precise schema; unions/joins re-widen nullability as needed,

@@ -395,3 +395,16 @@ def test_clone_as_of_ref_quoted_and_unbalanced(spark, tmp_path):
             "CREATE TABLE dst_tagq2 LIKE src_tagq AS OF REF 'pin WITH DATA"
         )
     assert not eng.catalog.table_exists("dst_tagq2")
+
+
+def test_show_partitions_renders_backslash_and_newline(spark):
+    """Partition values reach SHOW PARTITIONS byte for byte: no escape
+    rule of the SQL parser may turn `a\\b` into a backspace or `x\\ny`'s
+    newline into anything else."""
+    eng = _engine(spark)
+    tbl = eng.catalog.create_table("src_sp_esc", "k bigint, m string", ["m"])
+    tbl.insert(
+        spark.createDataFrame([(1, "a\\b"), (2, "x\ny")], "k bigint, m string")
+    )
+    got = [r["partition"] for r in eng.sql("SHOW PARTITIONS src_sp_esc").collect()]
+    assert got == ["m=a\\b", "m=x\ny"]

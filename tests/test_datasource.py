@@ -329,3 +329,23 @@ def test_batch_read_applies_mor_deletes(spark, catalog):
     assert got == _rows(t.to_df())
     assert len(got) == 400 - 40 + 1
     assert (4, -4, 0) in got and all(r[0] != 13 for r in got)
+
+
+def test_batch_write_nan_float_bounds_not_trusted(spark, catalog, tmp_path):
+    """The data-source writer's pyarrow files leave NaN out of float
+    min/max; those bounds must not answer a count from metadata. Spark
+    orders NaN above every value, so ``d <= 5`` excludes it."""
+    from icebergsql_spark.sql import Engine
+
+    eng = Engine(spark, str(tmp_path / "wh_nan"))
+    t = eng.catalog.create_table("ds_nan", "k bigint, d double", partition_cols=["k"])
+    rows = [(1, 1.0), (1, float("nan")), (1, 2.0)]
+    register_datasource(spark)
+    spark.createDataFrame(rows, "k bigint, d double").write.format(
+        "icebergsql"
+    ).mode("append").save(t.meta.location)
+    stock = spark.createDataFrame(rows, "k bigint, d double")
+    want = stock.where("d <= 5").count()
+    assert want == 2
+    got = eng.sql("SELECT COUNT(*) FROM ds_nan WHERE d <= 5").collect()[0][0]
+    assert got == want

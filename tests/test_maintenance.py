@@ -784,6 +784,32 @@ def test_remove_orphan_files_distributed(spark, tmp_path, monkeypatch):
     assert tbl.to_df().count() == 40
 
 
+def test_remove_orphan_files_distributed_plans_no_python_rdd(spark, tmp_path, monkeypatch):
+    """The sweep's driver-side inputs (manifest paths, data subdirectories)
+    are VALUES LocalRelations: its plan has no Python-RDD scan."""
+    tbl = Catalog(spark, str(tmp_path / "wh_orph_plan")).create_table(
+        "t_orph_plan", "k bigint, part int", partition_cols=["part"]
+    )
+    tbl.insert(
+        spark.range(10).select(
+            F.col("id").alias("k"), (F.col("id") % 2).cast("int").alias("part")
+        )
+    )
+    plans = []
+    DataFrame = type(spark.range(1))
+    collect = DataFrame.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    assert tbl.remove_orphan_files(distributed=True) == 0
+    monkeypatch.undo()
+    assert plans and all("LocalTableScan" in p for p in plans)
+    assert not any("ExistingRDD" in p for p in plans)
+
+
 def test_call_procedures(spark, tmp_path):
     """CALL [system.]<proc>(...) — Iceberg Spark-procedure parity:
     rollback/set-current/timestamp rollback, expire, rewrite_data_files,

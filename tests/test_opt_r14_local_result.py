@@ -85,3 +85,20 @@ def test_empty_typed_df_zero_rows_and_types(spark):
     # folds to an empty LocalRelation (0 partitions), never
     # defaultParallelism empty Python-RDD slices
     assert df.rdd.getNumPartitions() <= 1
+
+
+def test_values_local_df_strings_exact_under_both_parser_modes(spark):
+    """Strings are rendered as hex bytes, so neither parser mode's escape
+    rules nor ``${...}`` substitution can change them."""
+    vals = ["it's", "a\\b", "x\ny", "${x}", "", "Ünï", "\\'", "'"]
+    key = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(key)
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(key, mode)
+            df = _values_local_df(spark, [(v, i) for i, v in enumerate(vals)],
+                                  "s string, i int")
+            assert [r["s"] for r in sorted(df.collect(), key=lambda r: r["i"])] == vals
+            assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
