@@ -416,6 +416,16 @@ class DeleteSet:
         """The equality deletes that mask rows of ``f``."""
         return [e for e in self.eqs if e.seq > f.seq]
 
+    def live_rows(self) -> int | None:
+        """Live rows of the file set from metadata alone: each file's
+        ``record_count`` minus its DV counts (writers de-duplicate
+        positions, so counts are additive). None when an equality delete
+        applies: how many rows it masks is unknown without a scan."""
+        if self.eqs:
+            return None
+        counts = self.dv_counts
+        return sum(f.record_count - counts.get(f.path, 0) for f in self._files)
+
 
 @dataclass
 class Snapshot:

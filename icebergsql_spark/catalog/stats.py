@@ -107,12 +107,12 @@ def file_stats(
 ) -> tuple[int, int, dict[str, ColStats]]:
     """(record_count, byte_size, {column: ColStats}) for one parquet file.
 
-    ``imported`` marks a file from an outside writer, or from the data
-    source's pyarrow writer. Its float/double bounds are kept only when
-    parquet-mr wrote it: Arrow C++ (pyarrow) leaves NaN out of min/max, so
-    a `d > 5` pruned on such a bound would drop a NaN row that Spark
-    returns. The driver writer's pyarrow files are not imported: it writes
-    no statistics for a column holding NaN."""
+    ``imported`` marks a file from an outside writer. Its float/double
+    bounds are kept only when parquet-mr wrote it: Arrow C++ (pyarrow)
+    leaves NaN out of min/max, so a `d > 5` pruned on such a bound would
+    drop a NaN row that Spark returns. Our own pyarrow files are not
+    imported: the driver writer writes no statistics for a column holding
+    NaN, the data source writer none for any float/double column."""
     import os
 
     import pyarrow.parquet as pq

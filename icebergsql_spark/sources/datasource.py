@@ -502,7 +502,14 @@ def _write_task(out_root: str, partition_cols: list[str], schema_id: int,
         d = os.path.join(out_root, *segs)
         os.makedirs(d, exist_ok=True)
         path = os.path.join(d, f"part-{task_id:05d}-{_uuid.uuid4().hex[:12]}.parquet")
-        return pq.ParquetWriter(path, batch_schema), path, pdict
+        # pyarrow leaves NaN out of float min/max, but Spark orders NaN
+        # above every value: a NaN-free max would let `d > x` prune a
+        # file holding a matching NaN, in our planner and in Spark's own
+        # row-group filter. A streamed file cannot see its later batches,
+        # so no float/double column gets statistics.
+        stats_cols = [f.name for f in batch_schema if not pa.types.is_floating(f.type)]
+        writer = pq.ParquetWriter(path, batch_schema, write_statistics=stats_cols)
+        return writer, path, pdict
 
     for batch in iterator:
         if batch.num_rows == 0:
@@ -527,9 +534,7 @@ def _write_task(out_root: str, partition_cols: list[str], schema_id: int,
     out: list[DataFile] = []
     for w, path, pdict in writers.values():
         w.close()
-        # pyarrow leaves NaN out of float min/max: read the footer as an
-        # outside writer's, whose float bounds are not trusted
-        n_rows, size, stats = file_stats(path, imported=True)
+        n_rows, size, stats = file_stats(path)
         out.append(
             DataFile(
                 path=path,

@@ -332,20 +332,42 @@ def test_batch_read_applies_mor_deletes(spark, catalog):
 
 
 def test_batch_write_nan_float_bounds_not_trusted(spark, catalog, tmp_path):
-    """The data-source writer's pyarrow files leave NaN out of float
-    min/max; those bounds must not answer a count from metadata. Spark
-    orders NaN above every value, so ``d <= 5`` excludes it."""
+    """The data-source writer's pyarrow files would leave NaN out of float
+    min/max; Spark orders NaN above every value, so such a bound would let
+    our planner or Spark's own row-group filter drop the NaN row of
+    ``d > 5``. The writer keeps float statistics out of the footer, so
+    every query matches stock Spark over the same rows."""
+    import pyarrow.parquet as pq
+
     from icebergsql_spark.sql import Engine
 
     eng = Engine(spark, str(tmp_path / "wh_nan"))
-    t = eng.catalog.create_table("ds_nan", "k bigint, d double", partition_cols=["k"])
-    rows = [(1, 1.0), (1, float("nan")), (1, 2.0)]
+    t = eng.catalog.create_table(
+        "ds_nan", "i bigint, k bigint, d double", partition_cols=["k"]
+    )
+    rows = [(1, 1, 1.0), (2, 1, float("nan")), (3, 1, 2.0)]
     register_datasource(spark)
-    spark.createDataFrame(rows, "k bigint, d double").write.format(
-        "icebergsql"
-    ).mode("append").save(t.meta.location)
-    stock = spark.createDataFrame(rows, "k bigint, d double")
-    want = stock.where("d <= 5").count()
-    assert want == 2
-    got = eng.sql("SELECT COUNT(*) FROM ds_nan WHERE d <= 5").collect()[0][0]
-    assert got == want
+    spark.createDataFrame(rows, "i bigint, k bigint, d double").coalesce(
+        1
+    ).write.format("icebergsql").mode("append").save(t.meta.location)
+    t.refresh()
+    (f,) = t.meta.current_snapshot().live_files()
+    assert "d" not in f.stats and f.stats["i"].max == 3
+    footer = pq.ParquetFile(f.path).metadata.row_group(0)
+    by_name = {
+        footer.column(c).path_in_schema: footer.column(c)
+        for c in range(footer.num_columns)
+    }
+    assert not by_name["d"].is_stats_set and by_name["i"].is_stats_set
+    spark.createDataFrame(rows, "i bigint, k bigint, d double").createOrReplaceTempView(
+        "ds_nan_stock"
+    )
+    for q in (
+        "SELECT COUNT(*) FROM {t} WHERE d <= 5",
+        "SELECT i FROM {t} WHERE d > 5",
+        "SELECT i FROM {t} WHERE d >= 1 ORDER BY i",
+    ):
+        got = eng.sql(q.format(t="ds_nan")).collect()
+        want = spark.sql(q.format(t="ds_nan_stock")).collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want], q
+    assert eng.sql("SELECT COUNT(*) FROM ds_nan WHERE d <= 5").collect()[0][0] == 2

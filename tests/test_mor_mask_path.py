@@ -11,6 +11,7 @@ import pytest
 
 from icebergsql_spark.catalog.metadata import (
     DataFile,
+    DeleteSet,
     DeleteVectorEntry,
     DVManifest,
     EqManifest,
@@ -58,6 +59,9 @@ def test_delete_set_chooses_dvs_and_eqs(tmp_path, monkeypatch):
     assert [e.eq_path for e in d.eqs_masking(b)] == ["/eq2"]
     # same-seq rows survive: a file at seq 4 is masked by nothing
     assert snap.deletes([_file("/b", 4)]).eqs == []
+    # live rows: record counts minus DV counts, unknown under an eq delete
+    assert d.live_rows() is None
+    assert snap.deletes([_file("/a", 4), _file("/b", 4)]).live_rows() == 15
     # an empty file set reads no delete manifest at all
     reads = []
     monkeypatch.setattr(
@@ -68,6 +72,7 @@ def test_delete_set_chooses_dvs_and_eqs(tmp_path, monkeypatch):
     )
     empty = snap.deletes([])
     assert (empty.dvs, empty.eqs, empty.dv_counts) == ([], [], {})
+    assert empty.live_rows() == 0
     assert reads == []
     # each side reads its manifests once, and only when asked
     d = snap.deletes([a])
@@ -94,7 +99,7 @@ def mor_table(spark, tmp_path):
     return t
 
 
-def test_live_row_count_goes_through_count_from_stats(spark, mor_table, monkeypatch):
+def test_live_row_count_is_the_delete_set_count(spark, mor_table, monkeypatch):
     t = mor_table
     t.delete_where("k < 30")  # position DVs only: decidable from metadata
     assert t.live_row_count() == 170 == t.to_df().count()
@@ -105,8 +110,10 @@ def test_live_row_count_goes_through_count_from_stats(spark, mor_table, monkeypa
     # an unconverted equality delete: undecidable, so the masked count
     assert t.scan().count_from_stats() is None
     assert t.live_row_count() == 171 == t.to_df().count()
-    # the metadata answer, when there is one, is taken as is
-    monkeypatch.setattr(ManagedScan, "count_from_stats", lambda self: 12345)
+    # the metadata answer, when there is one, is taken as is, and no scan
+    # is planned for it
+    monkeypatch.setattr(DeleteSet, "live_rows", lambda self: 12345)
+    monkeypatch.setattr(ManagedScan, "__init__", None)
     assert t.live_row_count() == 12345
 
 

@@ -102,3 +102,23 @@ def test_values_local_df_strings_exact_under_both_parser_modes(spark):
             assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set(key, prev)
+
+
+def test_values_local_df_above_row_cap_and_unknown_type(spark):
+    """Above ``_VALUES_MAX_ROWS`` rows the parser's cost outgrows the
+    Python-RDD frame, which then carries the same rows and schema; a
+    type the renderer has no literal form for is refused, not guessed."""
+    import pytest
+
+    from icebergsql_spark.table import _VALUES_MAX_ROWS
+
+    schema = "p string, n long"
+    rows = [(f"/t/data/part-{i}.parquet", i) for i in range(_VALUES_MAX_ROWS + 1)]
+    df = _values_local_df(spark, rows, schema)
+    assert df.schema.simpleString() == "struct<p:string,n:bigint>"
+    assert sorted(tuple(r) for r in df.collect()) == sorted(rows)
+    assert "LocalTableScan" not in df._jdf.queryExecution().executedPlan().toString()
+    at_cap = _values_local_df(spark, rows[:_VALUES_MAX_ROWS], schema)
+    assert "LocalTableScan" in at_cap._jdf.queryExecution().executedPlan().toString()
+    with pytest.raises(ValueError, match="timestamp"):
+        _values_local_df(spark, [(None,)], "t timestamp")
