@@ -4479,11 +4479,9 @@ def _values_local_df(spark, rows, schema: str):
     ``_VALUES_SQL_TYPES``; every column is CAST to the declared type so
     all-NULL columns keep their schema.  Empty input (VALUES needs a row)
     becomes a typed zero-row filtered OneRowRelation.  Above
-    ``_VALUES_MAX_ROWS`` rows the frame comes from ``createDataFrame``:
-    the parser's cost grows with the literal count, and at local[2] a
-    VALUES of 16,000 path rows took twice as long to build as the
-    Python-RDD frame (0.55 s against 0.28 s), while at 4,000 it was still
-    the faster (0.19 s against 0.22 s).
+    ``_VALUES_MAX_ROWS`` rows the parser costs more than a Python-RDD
+    frame (local[2], path rows: 0.19 s against 0.22 s at 4,000, 0.55 s
+    against 0.28 s at 16,000), so ``createDataFrame`` builds it.
 
     Strings are rendered as hex bytes, ``CAST(X'..' AS STRING)``: a
     quoted literal would pass through the parser's escape rules, which
