@@ -4478,10 +4478,10 @@ def _values_local_df(spark, rows, schema: str):
     zero Python workers.  ``schema`` may name only the scalar types of
     ``_VALUES_SQL_TYPES``; every column is CAST to the declared type so
     all-NULL columns keep their schema.  Empty input (VALUES needs a row)
-    becomes a typed zero-row filtered OneRowRelation.  Above
-    ``_VALUES_MAX_ROWS`` rows the parser costs more than a Python-RDD
-    frame (local[2], path rows: 0.19 s against 0.22 s at 4,000, 0.55 s
-    against 0.28 s at 16,000), so ``createDataFrame`` builds it.
+    becomes a typed zero-row filtered OneRowRelation.  The parser's cost
+    grows with the rows (local[2], path rows: 0.19 s against
+    ``createDataFrame``'s 0.22 s at 4,000, 0.55 s against 0.28 s at
+    16,000), so above ``_VALUES_MAX_ROWS`` ``createDataFrame`` builds it.
 
     Strings are rendered as hex bytes, ``CAST(X'..' AS STRING)``: a
     quoted literal would pass through the parser's escape rules, which
